@@ -9,6 +9,10 @@
         [--partitions N] [--format parquet|iceberg] [--golden <triples>] \
         [--manifest <manifest table>]
 
+``--partitions`` sets the corpus fan-out; left out, it follows the
+session's ``spark.sql.shuffle.partitions`` (e.g. ``--conf
+spark.sql.shuffle.partitions=N``).
+
 Prints a one-line JSON RunReport (row counts per stage, P/R when golden is
 given, sha-invariant result when a manifest is given).
 """
@@ -28,7 +32,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--out", default=None)
     ap.add_argument("--run-dir", default=None)
     ap.add_argument("--run-id", default="r0")
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--format", dest="fmt", default="parquet")
     ap.add_argument("--golden", default=None)
     ap.add_argument("--manifest", default=None)

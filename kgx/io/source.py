@@ -101,8 +101,17 @@ def latest_commit_map(spark: SparkSession, uri: str, fmt: str = "parquet") -> Da
     return df.groupBy("repo", "path").agg(F.max("commit").alias("commit"))
 
 
-def repartition_corpus(df: DataFrame, num_partitions: int) -> DataFrame:
+def repartition_corpus(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Explicit hash repartition on file_key (= sha256(repo,path)) so one
     file's rows land in one task and the detect UDF sees balanced batches
-    [BASELINE.json:L6]."""
+    [BASELINE.json:L6].
+
+    ``num_partitions=None`` resolves to the session's
+    ``spark.sql.shuffle.partitions`` — the corpus fan-out then follows the
+    same setting as every other shuffle (sized to the host by
+    kgx.session.get_spark, to the data by cluster callers).  The count is
+    always passed explicitly, so the exchange stays a fixed-width
+    REPARTITION_BY_NUM that adaptive execution never coalesces."""
+    if num_partitions is None:
+        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(num_partitions, "file_key")

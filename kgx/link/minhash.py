@@ -17,7 +17,6 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -132,14 +131,13 @@ def minhash_bands_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(batch_band_hashes(texts.tolist()))
 
 
-def with_bands(df: DataFrame, text_col: str) -> DataFrame:
-    """Attach exploded (band_id, band_hash) rows for LSH candidate joins
-    (Arrow-batched UDF variant — used by corpus dedup, kgx.extras.dedup)."""
-    return (
-        df.withColumn("__bands", minhash_bands_udf(F.col(text_col)))
-        .select("*", F.posexplode("__bands").alias("band_id", "band_hash"))
-        .drop("__bands")
-    )
+# The function is pure, but marking it non-deterministic pins its evaluation
+# to the rows it is applied to.  Every caller explodes the band array
+# (kgx.stages.link, kgx.extras.dedup); Catalyst infers ``size(...) > 0``
+# from an inner explode and, for a deterministic UDF, pushes that filter
+# with the UDF inside it below any DISTINCT or repartition, so the UDF would
+# run once per input row and again where it was placed.
+minhash_bands_udf = minhash_bands_udf.asNondeterministic()
 
 
 # NOTE: a pure-JVM minhash via 64 higher-order-function transforms was

@@ -18,6 +18,7 @@ for the two places an explicit materialization is load-bearing:
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +32,8 @@ from kgx.stages.detect import detect_mentions
 from kgx.stages.link import link_entities
 from kgx.stages.materialize import materialize_triples, write_triples
 
+log = logging.getLogger(__name__)
+
 
 @dataclass
 class PipelineConfig:
@@ -39,7 +42,15 @@ class PipelineConfig:
     out_uri: str | None = None
     run_dir: str | None = None  # checkpoint/lineage root; None = no resume
     run_id: str = "r0"
-    num_partitions: int = 32
+    # corpus fan-out: the partition count of the spec-mandated
+    # sha256(repo,path) repartition, and so of the detect stage and every
+    # stage-2 pass over its checkpoint.  None follows the session's
+    # spark.sql.shuffle.partitions (kgx.session.get_spark sizes it to the
+    # host's cores in local mode; cluster callers size it to the data), so
+    # one setting sizes every corpus-sized stage.  Each partition is one
+    # Python task per Python stage, and a Python task carries a fixed
+    # start-up cost whatever its size, so do not fan out wider than needed.
+    num_partitions: int | None = None
     enable_fuzzy: bool = True
     # data-dependent broadcast guard for the fuzzy channel's accepted
     # (surface -> compound) map: measured per run in link_entities, with a
@@ -146,15 +157,11 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
         cc_stop.set()
         try:
             spark.sparkContext.cancelJobGroup(cc_job_group)
-        except Exception:
-            pass  # the session may already be unusable; main_exc still raises
+        except Exception as e:  # the session may be unusable; main_exc still raises
+            log.warning("could not cancel background CC job group %s: %r", cc_job_group, e)
         cc_thread.join(timeout=60)
         if cc_thread.is_alive():
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "background CC thread did not exit within 60s of cancellation"
-            )
+            log.warning("background CC thread did not exit within 60s of cancellation")
             main_exc.add_note("background CC thread still running after cancel+60s join")
         if "error" in cc_box:
             main_exc.add_note(f"background CC also failed: {cc_box['error']!r}")

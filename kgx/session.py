@@ -3,11 +3,14 @@
 All sessions pin UTC + Arrow; shuffle partitions default to the core count
 (local mode) rather than Spark's 200 so small-SF runs don't over-parallelize.
 At cluster scale callers pass ``shuffle_partitions`` sized to the data
-(~128 MB per post-shuffle partition).
+(~128 MB per post-shuffle partition).  The same setting sizes the pipeline's
+corpus fan-out unless ``PipelineConfig.num_partitions`` overrides it
+(kgx.io.source.repartition_corpus).
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -145,5 +148,5 @@ def _warm_session(spark: SparkSession) -> None:
         spark.range(0, 64).select(_identity(F.col("id")).alias("y")).write.format(
             "noop"
         ).mode("overwrite").save()
-    except Exception:  # pragma: no cover - warm-up must never fail a session
-        pass
+    except Exception as e:  # pragma: no cover - warm-up must never fail a session
+        logging.getLogger(__name__).warning("session warm-up failed, continuing cold: %r", e)

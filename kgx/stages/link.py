@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kgx.io.dictionary import skeleton_index_df, term_table
-from kgx.link.minhash import with_bands  # noqa: F401 (extras reuse)
 from kgx.link.rerank import rerank
 from kgx.text.normalize import skeleton_col
 
@@ -157,8 +156,9 @@ def link_entities(
     #     distance 2 on long names) and
     # (b) deletion-neighborhood signatures (kgx.link.symdel — deterministic
     #     for edit distance ≤1 including short names).
-    # Both families are pure JVM column algebra (kgx.link.minhash.bands_col,
-    # symdel.del1_signatures): ONE explode, ONE broadcast equi-join on the
+    # The deletion neighborhood is JVM column algebra
+    # (symdel.del1_signatures), the minhash bands an Arrow-batched UDF
+    # (kgx.link.minhash): ONE explode, ONE broadcast equi-join on the
     # signature value, with cheap codegen'd gates (length window + built-in
     # levenshtein) so only true near-misses reach the Arrow-batched rerank —
     # candidate volume tracks real misspellings, not band collisions
@@ -177,6 +177,15 @@ def link_entities(
         from kgx.link.symdel import del1_signatures
 
         def with_sigs(df, text_col):
+            # minhash_bands_udf is marked non-deterministic, which keeps it
+            # (and the interpreted del1 transform) on THIS projection: the
+            # inner explode makes Catalyst infer ``size(__sigs) > 0``, and
+            # were the UDF deterministic, predicate pushdown would carry
+            # that filter — UDF included — below the surfaces' DISTINCT onto
+            # every fuzzy-eligible mention row of the checkpoint (and below
+            # the term side's repartition onto its single coalesced
+            # partition), so every string would pay the signatures twice.
+            # tests/test_plan_shape.py pins the resulting plan shape.
             return (
                 df.withColumn(
                     "__sigs",

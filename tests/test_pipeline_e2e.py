@@ -80,6 +80,26 @@ def test_rerun_is_deterministic(spark, tiny_dir, outputs):
     assert a == b
 
 
+def test_default_partitions_follow_session(spark, tiny_dir, outputs):
+    """PipelineConfig's default corpus fan-out is the session's
+    spark.sql.shuffle.partitions, and it must give the same triples as an
+    explicit num_partitions=32.  The links checkpoint inherits the corpus
+    repartition's width (every lookup after it is a broadcast join), so its
+    partition count shows the fan-out a run used."""
+    session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert session_n != 32
+    want = sorted(map(tuple, outputs["triples"].collect()))
+    for n in (None, 32):
+        cfg = PipelineConfig(
+            source_uri=f"{tiny_dir}/source_files.parquet",
+            dict_uri=f"{tiny_dir}/compound_dict.parquet",
+            num_partitions=n,
+        )
+        out = run_pipeline(spark, cfg)
+        assert out["links"].rdd.getNumPartitions() == (session_n if n is None else n)
+        assert sorted(map(tuple, out["triples"].collect())) == want, n
+
+
 def test_links_are_top1_per_mention(outputs):
     dup = outputs["links"].groupBy("mention_id").count().filter(F.col("count") > 1)
     assert dup.count() == 0
