@@ -15,8 +15,8 @@ name linking) as four declarative DataFrame stages over a corpus table
 4. ``kgx.stages.materialize``  — partitioned (subj, pred, obj) triple tables:
    mentions / hasSMILES / hasInChI / synonymOf / foundInRepo.
 
-Spec of record: /root/repo/BASELINE.json (north_star L6, north_rule L14,
-input_hint L15).  The reference checkout at /root/reference is empty, so
+Spec of record: ``BASELINE.json`` at the repository root (north_star L6,
+north_rule L14, input_hint L15).  No reference checkout is available, so
 reference parity is cited against BASELINE.json and public knowledge of the
 molminer package only (see SURVEY.md §0).
 """

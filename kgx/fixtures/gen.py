@@ -773,6 +773,9 @@ def expected_multimodal_features(n: int = 64) -> pd.DataFrame:
     )
 
 
+# the checkout's tests/fixtures, wherever the checkout lives
+FIXTURE_BASE = Path(__file__).resolve().parents[2] / "tests" / "fixtures"
+
 _TABLES = (
     "source_files",
     "compound_dict",
@@ -784,7 +787,7 @@ _TABLES = (
 )
 
 
-def ensure(scale: str, base: str | Path = "/root/repo/tests/fixtures") -> Path:
+def ensure(scale: str, base: str | Path = FIXTURE_BASE) -> Path:
     """Generate-if-missing; returns the fixture directory.  A fixture dir
     is regenerated wholesale when any expected table is absent OR when its
     manifest's gen_version stamp mismatches GEN_VERSION — partial or
@@ -808,5 +811,5 @@ if __name__ == "__main__":
     import sys
 
     sc = sys.argv[1] if len(sys.argv) > 1 else "small"
-    meta = generate(sc, Path("/root/repo/tests/fixtures") / sc)
+    meta = generate(sc, FIXTURE_BASE / sc)
     print(json.dumps(meta, indent=2))

@@ -15,7 +15,7 @@ whole-stage codegen, zero Python.  The pandas rerank stays the scorer.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -32,15 +32,6 @@ def del1_signatures(col: Column) -> Column:
                 F.concat(s.substr(F.lit(1), i - 1), s.substr(i + 1, F.length(s)))
             )
         ),
-    )
-
-
-def with_del1(df: DataFrame, text_col: str) -> DataFrame:
-    """Attach exploded ``del_sig`` rows (one per del-1 variant)."""
-    return (
-        df.withColumn("__sigs", del1_signatures(F.col(text_col)))
-        .select("*", F.explode("__sigs").alias("del_sig"))
-        .drop("__sigs")
     )
 
 

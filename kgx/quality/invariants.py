@@ -35,8 +35,3 @@ def check_content_sha(files_keyed: DataFrame, manifest: DataFrame) -> dict:
         "ok": (agg["sha_mismatch"] or 0) == 0 and (agg["missing_in_manifest"] or 0) == 0,
     }
 
-
-def assert_content_sha(files_keyed: DataFrame, manifest: DataFrame) -> None:
-    report = check_content_sha(files_keyed, manifest)
-    if not report["ok"]:
-        raise AssertionError(f"content sha256 invariant violated: {report}")

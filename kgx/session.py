@@ -10,10 +10,25 @@ corpus fan-out unless ``PipelineConfig.num_partitions`` overrides it
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import SparkSession
+
+# on a 96 GB host the 2.4M-file corpus measured 535 s of GC thrash with a
+# 16g heap at local[32], and 96g halved its local[8] wall versus 48g
+_MAX_DRIVER_GIB = 96
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode driver heap: 3/4 of the host's ``MemTotal`` in whole GiB,
+    capped at 96g (also the answer when ``meminfo`` cannot be read)."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{_MAX_DRIVER_GIB}g"
+    gib = kib * 3 // 4 // (1 << 20)
+    return f"{max(1, min(gib, _MAX_DRIVER_GIB))}g"
 
 
 def get_spark(
@@ -24,11 +39,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with kgx defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback 32) in the
-    sandbox; on a real cluster spark-submit supplies it and this arg is None.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback: the
+    host's core count); on a real cluster spark-submit supplies it and this
+    arg is None.
     """
+    cores = os.cpu_count() or 1
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
@@ -37,7 +54,7 @@ def get_spark(
             parts = [int(x) for x in n.split(",")[:2]]
             shuffle_partitions = max(8, parts[0] * parts[1])
         else:
-            shuffle_partitions = 32 if n == "*" else max(8, int(n))
+            shuffle_partitions = max(8, cores if n == "*" else int(n))
 
     # local-cluster[N, cores, mem_mb]: real separate executor JVMs on one
     # host — the faithful in-sandbox proxy for "N vs 4N executors" (each
@@ -68,14 +85,14 @@ def get_spark(
         # on a GB-scale corpus file (cluster default 128m is for TB scans)
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only: the heap must hold 32 concurrent task
-        # buffers + localCheckpoint blocks; 16g measured 535s of GC thrash
-        # (3× task-time inflation) on the 2.4M-file corpus at local[32],
-        # and 48g still left 148s of task GC at local[8] (vs 10s at
-        # local[2]) — 96g halves local[8] wall on the scaling corpus
+        # local mode = driver-only: the heap holds every concurrent task
+        # buffer + localCheckpoint blocks, so it gets as much of the host
+        # as is safe (see default_driver_memory)
         .config(
             "spark.driver.memory",
-            os.environ.get("KGX_DRIVER_MEM", "8g" if is_local_cluster else "96g"),
+            os.environ.get(
+                "KGX_DRIVER_MEM", "8g" if is_local_cluster else default_driver_memory()
+            ),
         )
         # throughput collector: G1's pause-time targeting churns on this
         # allocation-heavy batch workload (1324s GC vs ~400s Parallel at 32
@@ -100,53 +117,4 @@ def get_spark(
             b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (
-        os.environ.get("KGX_SESSION_WARM", "1") != "0"
-        and spark.conf.get("kgx.session.warmed", None) is None
-    ):
-        _warm_session(spark)
-        spark.conf.set("kgx.session.warmed", "1")
     return spark
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One ~2 s framework warm-up per fresh session, over synthetic ranges.
-
-    HotSpot/classloader first-use costs — whole-stage codegen compilation,
-    shuffle + broadcast machinery, the window path, and the Arrow python
-    worker spawn — otherwise bill themselves to the first REAL jobs of the
-    session: event logs show ~9 s of the pipeline's serial floor is this
-    one-time tax (first tiny lexicon job 4.0 s, first broadcast build
-    5.6 s, first python stage +2-3 s of worker spawn — all for
-    milliseconds of actual work).  Warming at session creation charges it
-    to setup, where it belongs: the same measure-the-engine rationale as
-    bench.py's untimed ``_warm_page_cache``.  No input data is touched and
-    nothing is cached — this computes over ``spark.range`` literals only.
-    Opt out with KGX_SESSION_WARM=0.
-    """
-    try:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        df = spark.range(0, 1 << 14).select(F.col("id"), (F.col("id") % 53).alias("k"))
-        small = spark.range(0, 53).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-        )
-        w = Window.partitionBy("k").orderBy("id")
-        (
-            df.join(F.broadcast(small), "k")
-            .withColumn("rn", F.row_number().over(w))
-            .groupBy("k")
-            .agg(F.sum("rn").alias("s"))
-            .write.format("noop").mode("overwrite").save()
-        )
-
-        @F.pandas_udf("long")
-        def _identity(x):
-            return x
-
-        spark.range(0, 64).select(_identity(F.col("id")).alias("y")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    except Exception as e:  # pragma: no cover - warm-up must never fail a session
-        logging.getLogger(__name__).warning("session warm-up failed, continuing cold: %r", e)

@@ -123,7 +123,10 @@ def norm_term_col(col):
 
     c = F.lower(col)
     c = F.regexp_replace(c, r"[^a-z0-9,\-']+", " ")
-    c = F.regexp_replace(c, r"(^|\s)[,\-']+|[,\-']+(\s|$)", " ")
+    # strip separator runs at token edges, as norm_term's strip(",-'") does
+    # per token; lookarounds, because in "x- -y" both runs border the one
+    # space and a pattern that consumed it could strip only one of them
+    c = F.regexp_replace(c, r"(?<![a-z0-9,\-'])[,\-']+|[,\-']+(?![a-z0-9,\-'])", "")
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 

@@ -3,8 +3,6 @@ import pytest
 from kgx.fixtures.gen import ensure
 from kgx.session import get_spark
 
-FIXTURE_BASE = "/root/repo/tests/fixtures"
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -14,7 +12,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def tiny_dir():
-    return str(ensure("tiny", FIXTURE_BASE))
+    return str(ensure("tiny"))
 
 
 @pytest.fixture(scope="session")

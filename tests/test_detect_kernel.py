@@ -80,7 +80,7 @@ def test_abbreviation_not_bound_in_other_doc():
 
 
 def test_kernel_matches_golden_exactly_on_tiny():
-    d = ensure("tiny", "/root/repo/tests/fixtures")
+    d = ensure("tiny")
     dict_pdf = pd.read_parquet(f"{d}/compound_dict.parquet")
     sf = pd.read_parquet(f"{d}/source_files.parquet")
     gm = pd.read_parquet(f"{d}/golden_mentions.parquet")

@@ -1,8 +1,9 @@
 """Driver-contract invariants for __spark_entry__ (SURVEY §3.3/§3.4)."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod
 

@@ -1,5 +1,6 @@
 """Unit + property tests for the shared text kernel (SURVEY §5.2 items 2, 4)."""
 
+import random
 import string
 
 from hypothesis import given, settings
@@ -9,8 +10,10 @@ from kgx.text.normalize import (
     jaccard,
     levenshtein,
     norm_term,
+    norm_term_col,
     shingles,
     skeleton,
+    skeleton_col,
     tokenize_with_spans,
 )
 
@@ -73,3 +76,25 @@ def test_token_norm_is_plain_lowercase(text):
     tokens never start/end with ,-' nor contain separator runs."""
     for _, _, tok in tokenize_with_spans(text):
         assert norm_term(tok) == tok.lower()
+
+
+def test_column_twins_match_python(spark):
+    """The lexicon side keys surfaces with the JVM twins and detection with
+    the Python kernel; any disagreement silently drops an exact link."""
+    from pyspark.sql import functions as F
+
+    rng = random.Random(7)
+    alphabet = "abXY09 ,-'_\t.("
+    strings = ["x- -y", "a' -'b"] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 16))) for _ in range(2000)
+    ]
+    rows = (
+        spark.createDataFrame([(i, t) for i, t in enumerate(strings)], "i int, t string")
+        .select("i", norm_term_col(F.col("t")).alias("n"), skeleton_col(F.col("t")).alias("k"))
+        .collect()
+    )
+    got = {r["i"]: (r["n"], r["k"]) for r in rows}
+    bad = [
+        (t, got[i]) for i, t in enumerate(strings) if got[i] != (norm_term(t), skeleton(t))
+    ]
+    assert not bad, bad[:10]
