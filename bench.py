@@ -52,7 +52,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO_ROOT = os.path.dirname(os.path.abspath(__file__))  # the checkout this file sits in
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -63,13 +64,15 @@ _SKIP_SCALING = os.environ.get("KGX_SKIP_SCALING") == "1"
 # SCALES sizing rule: more data per executor, not code, restores it)
 BENCH_SCALE = os.environ.get("KGX_BENCH_SCALE", "bench" if _SKIP_SCALING else "scaling3")
 BENCH_REPS = int(os.environ.get("KGX_BENCH_REPS", "3"))
-RECORDS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench", "records")
+RECORDS_DIR = os.path.join(REPO_ROOT, "bench", "records")
+FIXTURES_DIR = os.path.join(REPO_ROOT, "tests", "fixtures")
 
 # identical job config at every parallelism level — only the core count
-# varies, as in an N vs 4N executor comparison
+# varies, as in an N vs 4N executor comparison.  NOT an f-string: the
+# child's own {…} must survive; REPO_ROOT is injected via %r substitution
 _CHILD_CODE = """
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %(repo_root)r)
 master, fixture_dir = sys.argv[1], sys.argv[2]
 from kgx.session import get_spark
 from kgx.pipeline import PipelineConfig, run_pipeline
@@ -93,7 +96,7 @@ if os.environ.get("KGX_BENCH_PR") == "1":  # outside the timed window
     rep["precision"] = round(pr["precision"], 4)
     rep["recall"] = round(pr["recall"], 4)
 print(json.dumps(rep))
-"""
+""" % {"repo_root": REPO_ROOT}
 
 
 def _current_engine_tree() -> str | None:
@@ -103,7 +106,7 @@ def _current_engine_tree() -> str | None:
     unavailable (pooling then uses only this run's reps)."""
     try:
         return subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)), "rev-parse", "HEAD:kgx"],
+            ["git", "-C", REPO_ROOT, "rev-parse", "HEAD:kgx"],
             capture_output=True,
             text=True,
             check=True,
@@ -173,7 +176,7 @@ def main() -> int:
     from kgx.fixtures.gen import ensure
     from kgx.session import get_spark
 
-    fixture_dir = str(ensure(BENCH_SCALE, "/root/repo/tests/fixtures"))
+    fixture_dir = str(ensure(BENCH_SCALE, FIXTURES_DIR))
 
     report: dict = {
         "metric": "kgx_e2e_pipeline_wall_sec",

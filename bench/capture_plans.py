@@ -2,12 +2,14 @@
 (plans/r07/<name>_{before,after}.txt).
 
 "before" runs against a scratch checkout of the pre-round tree (pass its
-path as KGX_TREE; sys.path is pointed there), "after" against /root/repo.
+path as the first argument; sys.path is pointed there), "after" against
+the checkout this script sits in (the default).  Plans and fixtures always
+go to this script's checkout, so both sides read the same fixture.
 Run each side in its own process:
 
     git archive <base-commit> | tar -x -C /tmp/kgx_before
     python bench/capture_plans.py /tmp/kgx_before before
-    python bench/capture_plans.py /root/repo after
+    python bench/capture_plans.py . after
 
 Pipeline-backed plans are built on the deterministic 'tiny' fixture
 (explain of link_entities' outputs executes its eager localCheckpoints —
@@ -23,9 +25,10 @@ import io
 import os
 import sys
 
-TREE = sys.argv[1] if len(sys.argv) > 1 else "/root/repo"
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TREE = sys.argv[1] if len(sys.argv) > 1 else REPO_ROOT
 SUFFIX = sys.argv[2] if len(sys.argv) > 2 else "after"
-OUT_DIR = "/root/repo/plans/r07"
+OUT_DIR = os.path.join(REPO_ROOT, "plans", "r07")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 sys.path.insert(0, TREE)
@@ -82,7 +85,7 @@ def main() -> None:
     from kgx.fixtures.gen import ensure
     from kgx.pipeline import PipelineConfig, run_pipeline
 
-    fixture_dir = str(ensure("tiny", "/root/repo/tests/fixtures"))
+    fixture_dir = str(ensure("tiny", os.path.join(REPO_ROOT, "tests", "fixtures")))
     cfg = PipelineConfig(
         source_uri=f"{fixture_dir}/source_files.parquet",
         dict_uri=f"{fixture_dir}/compound_dict.parquet",

@@ -24,13 +24,17 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO_ROOT = os.path.dirname(os.path.abspath(__file__))  # the checkout this file sits in
+sys.path.insert(0, REPO_ROOT)
+FIXTURES_DIR = os.path.join(REPO_ROOT, "tests", "fixtures")
 
 EVLOG_DIR = "/tmp/kgx-evlog-r07"
 
+# NOT an f-string: the child's own {…} must survive; REPO_ROOT is injected
+# via %r substitution
 _CHILD_CODE = """
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %(repo_root)r)
 master, fixture_dir, evdir = sys.argv[1], sys.argv[2], sys.argv[3]
 from kgx.session import get_spark
 from kgx.pipeline import PipelineConfig, run_pipeline
@@ -52,13 +56,13 @@ wall = time.monotonic() - t0
 print(json.dumps({"wall_sec": round(wall, 2), "triples": n_triples,
                   "app_id": spark.sparkContext.applicationId}))
 spark.stop()
-"""
+""" % {"repo_root": REPO_ROOT}
 
 
 def run_pipeline_once(tag: str = "r07") -> dict:
     from kgx.fixtures.gen import ensure
 
-    fixture_dir = str(ensure("scaling3", "/root/repo/tests/fixtures"))
+    fixture_dir = str(ensure("scaling3", FIXTURES_DIR))
     os.makedirs(EVLOG_DIR, exist_ok=True)
     subprocess.run(["sync"], check=False)
     time.sleep(5)
@@ -116,7 +120,7 @@ def run_abtest(opts_a: str, opts_b: str, pairs: int = 3) -> None:
 
     from kgx.fixtures.gen import ensure
 
-    fixture_dir = str(ensure("scaling3", "/root/repo/tests/fixtures"))
+    fixture_dir = str(ensure("scaling3", FIXTURES_DIR))
     os.makedirs(EVLOG_DIR, exist_ok=True)
 
     def one(opts: str) -> dict:

@@ -132,13 +132,6 @@ def stage_checkpoint(spark: SparkSession, df: DataFrame, stage: str, cfg) -> Dat
     return spark.read.parquet(data_dir)
 
 
-def resume_anti_join(df: DataFrame, committed: DataFrame, key: str) -> DataFrame:
-    """Finer-grained resume (SURVEY §2 D4): drop input rows whose ``key``
-    already appears in a committed output — e.g. re-ingesting a corpus delta
-    without re-detecting files already processed."""
-    return df.join(committed.select(key).distinct(), key, "left_anti")
-
-
 def stage_fingerprint(spark: SparkSession, cfg, stage: str) -> int:
     """Total (partition-order-independent) fingerprint of a committed stage."""
     rows = (

@@ -77,10 +77,7 @@ def latest_versions(df: DataFrame) -> DataFrame:
     full shuffle of every column — including fat ``content``.  The
     pipeline (kgx.pipeline) applies the same window keyed on ``file_key``
     AFTER the mandated sha256(repo,path) repartition, where the exchange
-    is already satisfied and the window is a partition-local sort (round-5
-    rework; previously versions were dropped post-detection with a
-    mention-row semi join, which shuffled 23M wide rows at the gate
-    corpus).
+    is already satisfied and the window is a partition-local sort.
     """
     w = Window.partitionBy("repo", "path").orderBy(F.col("commit").desc())
     return (
@@ -88,17 +85,6 @@ def latest_versions(df: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def latest_commit_map(spark: SparkSession, uri: str, fmt: str = "parquet") -> DataFrame:
-    """(repo, path, commit=max) from a columns-pruned scan.  Catalyst pushes
-    the 3-column projection into the parquet/Iceberg reader, so the corpus
-    ``content`` bytes are never touched.  No longer on the pipeline's
-    critical path (the latest-version window rides the corpus repartition
-    since round 5); kept for slim-side version routing (D5 evidence) and
-    incremental/streaming consumers."""
-    df = read_table(spark, uri, fmt=fmt).select("repo", "path", "commit")
-    return df.groupBy("repo", "path").agg(F.max("commit").alias("commit"))
 
 
 def repartition_corpus(df: DataFrame, num_partitions: int | None = None) -> DataFrame:

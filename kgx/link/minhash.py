@@ -69,29 +69,6 @@ def shingle_hashes(s: str) -> np.ndarray:
     return np.fromiter((zlib.crc32(g.encode("utf-8")) for g in grams), dtype=np.int64)
 
 
-def signature(sh: np.ndarray) -> np.ndarray:
-    """(n_shingles,) -> (K,) minhash signature."""
-    if sh.size == 0:
-        return np.zeros(K, dtype=np.int64)
-    # (K, n) universal hashes; python-int modulus avoided by staying < 2^61
-    with np.errstate(over="ignore"):
-        hs = (_A[:, None] * sh[None, :] + _B[:, None]) % _P
-    return hs.min(axis=1).astype(np.int64)
-
-
-def band_hashes(sig: np.ndarray) -> list[int]:
-    """(K,) signature -> BANDS int64 band keys (band id mixed in)."""
-    out = []
-    with np.errstate(over="ignore"):
-        for b in range(BANDS):
-            chunk = sig[b * ROWS : (b + 1) * ROWS]
-            h = np.int64(b + 1)
-            for v in chunk:
-                h = np.int64(h * _BAND_MIX) ^ np.int64(v)
-            out.append(int(h))
-    return out
-
-
 def batch_band_hashes(texts: list[str]) -> list[list[int]]:
     """Vectorized band keys for a whole Arrow batch: one flattened shingle
     array + ``np.minimum.reduceat`` per permutation, instead of per-row

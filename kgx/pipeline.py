@@ -187,15 +187,10 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
             # so the latest-version filter is a window that REUSES this
             # exchange (Catalyst plans no second shuffle: hashpartitioning
             # on file_key satisfies the window's required distribution) and
-            # runs BEFORE detection.  Round-5 rework: the previous design
-            # detected stale versions too and dropped them with a
-            # post-detection semi join against a (repo,path,max commit)
-            # map — that join shuffled every mention row (23M wide rows at
-            # the gate corpus, measured 35.6 s vs the window's in-partition
-            # sort) and re-scanned the corpus for the map.  The window is
-            # cheaper at every scale AND skips ~10% stale-version detection
-            # CPU; it is exactly the D7 latest/as-of idiom, now on the
-            # pipeline's critical path.
+            # runs BEFORE detection.  Stale versions are therefore never
+            # detected, and dropping them needs neither a second corpus scan
+            # nor a join that shuffles mention rows — only this in-partition
+            # sort (the D7 latest/as-of idiom).
             from pyspark.sql import Window
 
             files = repartition_corpus(
@@ -212,20 +207,18 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
             # Stage boundary materialization: with a run_dir the detection
             # output is durably checkpointed (parquet + lineage) and stage 2
             # reads it back.  WITHOUT a run_dir, `mentions` stays LAZY here:
-            # stage 2's exact/synonym join is its single consumer (round-5
-            # rework — the abbrev branch now routes off the joined table,
-            # kgx/stages/link.py), so the scan→window→detect plan fuses into
-            # that join's localCheckpoint and the corpus is materialized
-            # exactly once in RAM instead of twice back-to-back (the old
-            # mentions localCheckpoint wrote all ~N wide mention rows only
-            # for the join job to read them straight back).  Detection still
+            # stage 2's exact/synonym join is its single consumer (the
+            # abbrev branch routes off the joined table, kgx/stages/link.py),
+            # so the scan→window→detect plan fuses into that join's
+            # localCheckpoint and the corpus is materialized exactly once in
+            # RAM; a mentions checkpoint here would write every wide mention
+            # row only for the join to read it straight back.  Detection
             # executes exactly once: every downstream branch reads the join's
             # checkpoint.  The returned `mentions` handle in this mode is
-            # governed by cfg.materialize_mentions (round-6 rework): opted
-            # in, link_entities rebinds it to a full-schema view over its
-            # fused checkpoint via `mentions_out`; opted out (default), the
-            # result dict omits "mentions" so nothing can silently pay
-            # detection a second time.
+            # governed by cfg.materialize_mentions: opted in, link_entities
+            # rebinds it to a full-schema view over its fused checkpoint via
+            # `mentions_out`; opted out (default), the result dict omits
+            # "mentions" so nothing can silently pay detection a second time.
             mentions = detect_mentions(files, index_bc)
             if cfg.run_dir is not None:
                 # job descriptions label each stage boundary's action in the
@@ -260,12 +253,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
                 # stage 4 fans out into several triple projections over
                 # links; materialize once so each branch reads memory, not
                 # the cascade.  Deliberately NOT coalesced to the core
-                # count: a width-adaptive coalesce was tried (round 7) to
-                # cut the 64-task launch overhead on narrow clusters, and
-                # the resulting ~3M-row partitions OOMed the 12g executors
-                # in the stage-4 partial dedup — guide §5's "more
-                # partitions = smaller per-task state" wins over §2.2's
-                # task-launch arithmetic here.
+                # count: that saves task launches on narrow clusters, but
+                # its ~3M-row partitions OOMed 12g executors in stage 4's
+                # partial dedup — more partitions keep per-task state small.
                 links = links.localCheckpoint()
     except BaseException as e:
         _cancel_cc(e)

@@ -48,7 +48,10 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+        if master == "local":  # Spark runs a bare "local" on one core
+            n = "1"
+        else:
+            n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         if master.startswith("local-cluster"):
             # local-cluster[N, cores, mem]: total cores = N * cores
             parts = [int(x) for x in n.split(",")[:2]]

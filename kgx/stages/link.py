@@ -24,12 +24,10 @@ skeleton-misses; abbrev consumes the ABBREVIATION mtype no other branch
 touches) and every lookup side is unique on its key (the term/skeleton
 indexes by ``_unique_terms``/build; the fuzzy map reduced to top-1 per
 surface with a VOCABULARY-sized window before it ever meets mention
-rows), so each mention yields at most one link with no dedup step.
-Rounds 1–4 materialized the branches as a 4-way union instead — 4 scans
-of the checkpointed corpus — topped (rounds 1–3) by a corpus-scale top-1
-window that shuffled every link row to break ties that cannot exist.  A
-mention with no surviving method yields no link row (the reference drops
-unresolved entities the same way [PK: molminer/Extractor.py]).
+rows), so each mention yields at most one link: the corpus is scanned
+once, and no dedup or corpus-scale top-1 window is needed.  A mention with
+no surviving method yields no link row (the reference drops unresolved
+entities the same way [PK: molminer/Extractor.py]).
 """
 
 from __future__ import annotations
@@ -97,13 +95,13 @@ def link_entities(
     # second read of `mentions`): this makes j the SINGLE consumer of the
     # detection output, so when the caller passes a lazy `mentions` (the
     # no-run_dir pipeline path), scan→window→detect→join→checkpoint fuse
-    # into one job and the corpus is materialized exactly once instead of
-    # twice (kgx/pipeline.py round-5 note).
+    # into one job and the corpus is materialized exactly once (see the
+    # stage-boundary note in kgx/pipeline.py).
     sc.setJobDescription("kgx stage2: exact/synonym broadcast join")
     # drop the join key's lookup-side twin before checkpointing: term_norm
     # equals norm_text on every hit (and is null on misses), so carrying it
     # through the corpus-sized checkpoint is ~1 string per row of pure
-    # redundancy (round-7 slimming; nothing downstream reads it)
+    # redundancy (nothing downstream reads it)
     j = (
         base.join(
             F.broadcast(terms.select("term_norm", "compound_id", "kind")),
@@ -115,16 +113,12 @@ def link_entities(
     )
     if mentions_out is not None:
         mentions_out["mentions"] = j.select(*_MENTION_COLS)
-    # --- single routing pass over j (round-5 rework #2) --------------------
-    # The method branches used to be materialized as a 4-way union, each
-    # branch re-scanning j's checkpointed rows (exact, abbrev, systematic,
-    # fuzzy — 4 scans, plus a 5th skinny scan for the fuzzy surface
-    # vocabulary).  Every lookup side is vocabulary-sized and unique on its
-    # key (_unique_terms per term_norm; skeleton index per term_skeleton;
-    # fuzzy map top-1 per norm_text), so the whole cascade is expressible as
-    # ONE scan of j with three broadcast left joins and a priority
-    # when-chain — same rows, same scores, no fan-out possible.  Routing
-    # matches the old branch filters exactly:
+    # --- single routing pass over j ---------------------------------------
+    # Every lookup side is vocabulary-sized and unique on its key
+    # (_unique_terms per term_norm; skeleton index per term_skeleton; fuzzy
+    # map top-1 per norm_text), so the whole cascade is ONE scan of j with
+    # three broadcast left joins and a priority when-chain — no fan-out
+    # possible.  Routing per row:
     #   ABBREVIATION      -> defined_as lookup only (miss -> no row; detect
     #                        sets defined_as ONLY on ABBREVIATION rows,
     #                        kgx/stages/detect.py:342)
@@ -239,8 +233,7 @@ def link_entities(
         sc.setJobDescription("kgx stage2: fuzzy signatures + rerank")
         # top-1 per SURFACE on the vocabulary-sized accepted map — so the
         # fuzzy lookup (like every other routing branch) yields at most one
-        # row per mention, with the same (score desc, compound_id asc)
-        # tiebreak the old corpus-scale window applied to fuzzy ties
+        # row per mention, ties broken by (score desc, compound_id asc)
         w_surface = Window.partitionBy("norm_text").orderBy(
             F.col("score").desc(), F.col("compound_id").asc()
         )

@@ -38,11 +38,6 @@ _SQUEEZE_RE = re.compile(r"[^a-z0-9]+")
 MAX_TERM_TOKENS = 4
 
 
-def tokenize_with_spans(text: str) -> list[tuple[int, int, str]]:
-    """Raw text -> [(start, end, token)] with offsets into the raw text."""
-    return [(m.start(), m.end(), m.group(0)) for m in TOKEN_RE.finditer(text)]
-
-
 def norm_term(term: str) -> str:
     """Canonical lookup form of a dictionary term or a mention surface.
 

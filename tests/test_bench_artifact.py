@@ -11,8 +11,11 @@ canned results, so the assembly logic itself is covered by plain pytest.
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
+
+ROOT = Path(__file__).resolve().parents[1]  # the checkout these tests sit in
 
 
 class _DummySpark:
@@ -22,7 +25,8 @@ class _DummySpark:
 
 @pytest.fixture()
 def bench_mod(monkeypatch, tmp_path):
-    import bench as bench_mod  # /root/repo/bench.py (shadows the bench/ dir)
+    monkeypatch.syspath_prepend(str(ROOT))
+    import bench as bench_mod  # ROOT/bench.py (shadows the bench/ dir)
 
     # canned pipeline runs: W1/W4 walls chosen so per-rep eff is exact
     walls = {
@@ -164,10 +168,10 @@ def test_committed_records_parse_and_stamped_ones_pass_gate():
     import statistics
     import subprocess
 
-    paths = sorted(glob.glob("/root/repo/bench/records/scaling_*.json"))
+    paths = sorted(glob.glob(str(ROOT / "bench" / "records" / "scaling_*.json")))
     assert paths, "scaling records missing from bench/records/"
     head_tree = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "HEAD:kgx"],
+        ["git", "-C", str(ROOT), "rev-parse", "HEAD:kgx"],
         capture_output=True,
         text=True,
         check=True,
@@ -197,10 +201,54 @@ def test_committed_records_parse_and_stamped_ones_pass_gate():
     # (Skipped rather than failed while kgx/ has uncommitted edits: the
     # protocol stamps the tree it measured, which is unknowable mid-edit.)
     dirty = subprocess.run(
-        ["git", "-C", "/root/repo", "status", "--porcelain", "--", "kgx"],
+        ["git", "-C", str(ROOT), "status", "--porcelain", "--", "kgx"],
         capture_output=True,
         text=True,
         check=True,
     ).stdout.strip()
     if not dirty:
         assert current >= 1, "no committed scaling record measures HEAD:kgx"
+
+
+def test_bench_copy_runs_its_own_tree(monkeypatch, tmp_path):
+    """A copy of bench.py benchmarks the tree it sits in: its pipeline child
+    imports the copy's kgx, and its fixtures and records live in the copy."""
+    import importlib.util
+    import os
+    import subprocess
+    import sys
+
+    import kgx.fixtures.gen
+
+    copy = tmp_path / "copy"
+    (copy / "kgx").mkdir(parents=True)
+    (copy / "bench.py").write_text((ROOT / "bench.py").read_text())
+    (copy / "kgx" / "__init__.py").write_text("")
+    (copy / "kgx" / "session.py").write_text("raise SystemExit('KGX ' + __file__)\n")
+
+    monkeypatch.setattr(sys, "path", list(sys.path))  # the import prepends the copy
+    spec = importlib.util.spec_from_file_location("bench_copy", copy / "bench.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.RECORDS_DIR == str(copy / "bench" / "records")
+
+    child = subprocess.run(
+        [sys.executable, "-c", mod._CHILD_CODE, "local[1]", str(tmp_path)],
+        cwd=tmp_path,
+        env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert child.stderr.strip() == f"KGX {copy / 'kgx' / 'session.py'}", child.stderr
+
+    class _Resolved(Exception):
+        pass
+
+    def fake_ensure(scale, root):
+        raise _Resolved(root)
+
+    monkeypatch.setattr(kgx.fixtures.gen, "ensure", fake_ensure)
+    with pytest.raises(_Resolved) as got:
+        mod.main()
+    assert got.value.args[0] == str(copy / "tests" / "fixtures")

@@ -6,7 +6,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from kgx.io.checkpoint import lineage_df, resume_anti_join, stage_fingerprint
+from kgx.io.checkpoint import lineage_df, stage_fingerprint
 from kgx.pipeline import PipelineConfig, run_pipeline
 
 STAGES = ["mentions", "links", "components", "triples"]
@@ -50,9 +50,3 @@ def test_fresh_run_id_reproduces_fingerprints(spark, tiny_dir, tmp_path):
     for s in STAGES:
         assert stage_fingerprint(spark, cfg1, s) == stage_fingerprint(spark, cfg2, s)
 
-
-def test_resume_anti_join_drops_done_keys(spark):
-    todo = spark.range(0, 10).select(F.col("id").alias("file_key"))
-    done = spark.range(0, 4).select(F.col("id").alias("file_key"))
-    left = resume_anti_join(todo, done, "file_key")
-    assert sorted(r["file_key"] for r in left.collect()) == list(range(4, 10))

@@ -6,35 +6,31 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kgx.link.minhash import (
-    BANDS,
-    K,
-    ROWS,
-    band_hashes,
-    fuzzy_jaccard,
-    shingle_hashes,
-    signature,
-)
+from kgx.link.minhash import BANDS, K, ROWS, batch_band_hashes, fuzzy_jaccard
 
 words = st.text(alphabet=string.ascii_lowercase + "0123456789,-", min_size=0, max_size=40)
 
 
-@given(words)
+def bands(s: str) -> list[int]:
+    return batch_band_hashes([s])[0]
+
+
+@given(st.lists(words, max_size=8))
 @settings(max_examples=100)
-def test_signature_shape_and_determinism(s):
-    sig1 = signature(shingle_hashes(s))
-    sig2 = signature(shingle_hashes(s))
-    assert sig1.shape == (K,)
-    assert (sig1 == sig2).all()
-    assert len(band_hashes(sig1)) == BANDS
+def test_signature_shape_and_determinism(batch):
+    """Band keys depend on the string alone: the same in two calls, and
+    the same whether a string is hashed alone or inside any batch."""
+    got = batch_band_hashes(batch)
+    assert got == batch_band_hashes(batch)
+    assert got == [bands(s) for s in batch]
+    assert all(len(b) == BANDS for b in got)
     assert BANDS * ROWS == K
 
 
 @given(words, words)
 @settings(max_examples=100)
 def test_identical_strings_share_all_bands(a, b):
-    ba = band_hashes(signature(shingle_hashes(a)))
-    bb = band_hashes(signature(shingle_hashes(b)))
+    ba, bb = batch_band_hashes([a, b])
     if a == b:
         assert ba == bb
 
@@ -54,8 +50,7 @@ def test_edit_distance_one_caught_by_band_or_del1():
         ("trimethylhexanamine", "trimethylhexanamin"),
     ]
     for a, b in pairs:
-        ba = band_hashes(signature(shingle_hashes(a)))
-        bb = band_hashes(signature(shingle_hashes(b)))
+        ba, bb = batch_band_hashes([a, b])
         band_hit = any(x == y for x, y in zip(ba, bb))
         del_hit = bool(set(del1_variants(a)) & set(del1_variants(b)))
         assert band_hit or del_hit, (a, b)
@@ -71,8 +66,7 @@ def test_del1_variants_cover_ed1_edits():
 
 
 def test_unrelated_strings_share_no_band():
-    ba = band_hashes(signature(shingle_hashes("ethanol")))
-    bb = band_hashes(signature(shingle_hashes("buffer overflow status")))
+    ba, bb = batch_band_hashes(["ethanol", "buffer overflow status"])
     assert sum(1 for x, y in zip(ba, bb) if x == y) == 0
 
 

@@ -7,6 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kgx.text.normalize import (
+    TOKEN_RE,
     jaccard,
     levenshtein,
     norm_term,
@@ -14,7 +15,6 @@ from kgx.text.normalize import (
     shingles,
     skeleton,
     skeleton_col,
-    tokenize_with_spans,
 )
 
 texts = st.text(alphabet=string.printable, max_size=200)
@@ -46,7 +46,7 @@ def test_skeleton_merges_separator_variants():
 
 def test_tokenize_spans_index_raw_text():
     text = "x = water_level + 2,3-dimethylbutan-1-ol"
-    toks = tokenize_with_spans(text)
+    toks = [(m.start(), m.end(), m.group(0)) for m in TOKEN_RE.finditer(text)]
     for s, e, t in toks:
         assert text[s:e] == t
     assert [t for _, _, t in toks] == ["x", "water", "level", "2,3-dimethylbutan-1-ol"]
@@ -74,7 +74,7 @@ def test_token_norm_is_plain_lowercase(text):
     """The detect kernel's fast path (kgx.stages.detect) relies on
     norm_term(tok) == tok.lower() for every token TOKEN_RE can produce:
     tokens never start/end with ,-' nor contain separator runs."""
-    for _, _, tok in tokenize_with_spans(text):
+    for tok in TOKEN_RE.findall(text):
         assert norm_term(tok) == tok.lower()
 
 

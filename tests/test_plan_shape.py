@@ -33,13 +33,6 @@ def test_filter_and_projection_pushdown(spark, tiny_dir):
     assert "repo" in read_schema and "path" in read_schema
 
 
-def test_latest_commit_map_prunes_content(spark, tiny_dir):
-    from kgx.io.source import latest_commit_map
-
-    plan = _plan(latest_commit_map(spark, f"{tiny_dir}/source_files.parquet"))
-    assert "content" not in plan.split("ReadSchema")[1][:300]
-
-
 def test_link_uses_broadcast_joins(spark, tiny):
     idx = detection_index(tiny["compound_dict"].toPandas())
     bc = spark.sparkContext.broadcast(idx)

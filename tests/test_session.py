@@ -17,12 +17,19 @@ spark.stop()
 """
 
 
-def test_fresh_session_runs_no_jobs():
-    """get_spark returns the session as built: every job a caller sees in
-    the session's event log and timings is its own."""
+_BARE_LOCAL = """
+from kgx.session import get_spark
+spark = get_spark(master="local")
+print("PARTITIONS", spark.conf.get("spark.sql.shuffle.partitions"))
+spark.stop()
+"""
+
+
+def _run_fresh(script: str) -> list[str]:
+    """Run ``script`` in a new interpreter (a new JVM); its stdout lines."""
     env = dict(os.environ, PYTHONPATH=str(REPO))
     out = subprocess.run(
-        [sys.executable, "-c", _FRESH_SESSION],
+        [sys.executable, "-c", script],
         env=env,
         cwd=REPO,
         capture_output=True,
@@ -30,8 +37,22 @@ def test_fresh_session_runs_no_jobs():
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    jobs = [line for line in out.stdout.splitlines() if line.startswith("JOBS")]
-    assert jobs == ["JOBS []"], out.stdout
+    return out.stdout.splitlines()
+
+
+def test_fresh_session_runs_no_jobs():
+    """get_spark returns the session as built: every job a caller sees in
+    the session's event log and timings is its own."""
+    lines = _run_fresh(_FRESH_SESSION)
+    assert [line for line in lines if line.startswith("JOBS")] == ["JOBS []"], lines
+
+
+def test_bare_local_master_is_one_core():
+    """Spark's bare ``local`` master is one core, so shuffles and the corpus
+    fan-out get the 8-partition floor, not the 32 meant for masters that
+    name no core count."""
+    lines = _run_fresh(_BARE_LOCAL)
+    assert [line for line in lines if line.startswith("PARTITIONS")] == ["PARTITIONS 8"], lines
 
 
 def _meminfo(tmp_path, kib):
